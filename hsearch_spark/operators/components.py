@@ -10,15 +10,25 @@ shuffle-key = node id, O(log n) rounds, no driver-side state beyond the
 loop counter. Dedup graphs are shallow (stars within buckets), so in
 practice 3-5 rounds.
 
-Each round truncates lineage — without it the lineage doubles every
-iteration and the planner blows up (the distributed analog of the
-reference's in-RAM root[] mutation). Two modes:
+Small graphs skip the loop: when the edge table has at most
+_DRIVER_CC_MAX_EDGES rows, one Arrow collect + the vectorized
+min-label union-find (_uf_min_labels) labels every component on the
+driver and the labels are uploaded back — the same labels the loop
+converges to, with no star rounds. With a store the uploaded labels
+persist as the stage "cc/labels", so the CC result is durable and a
+crash inside CC re-runs one driver pass from the durable edges stage.
+
+Above that bound the star loop runs, and each round truncates lineage —
+without it the lineage doubles every iteration and the planner blows up
+(the distributed analog of the reference's in-RAM root[] mutation). Two
+modes:
 - store=None: localCheckpoint (fast, executor-local blocks — fine for
   local mode / tests, NOT fault-tolerant: a lost executor kills the run)
 - store=StageStore: every iteration persists its edge table to the
   store ("cc/iter_NNN" stages) — a crashed run resumes from the last
   completed iteration, and lost executors recompute from durable
   parquet instead of dying (north-rule resumability at cluster scale).
+The loop fails loudly if it has not converged after max_iter rounds.
 
 Deterministic canonical labels: cluster_id = min(doc_id) of the
 component — independent of partitioning, row order, and cluster size
@@ -214,12 +224,34 @@ def _arrow_upload(spark, pdf, schema: str) -> DataFrame:
                 spark.conf.set(k, val)
 
 
+_LABELS_SCHEMA = "doc_id long, cluster_id long"
+
+
+def _driver_labels(uv: DataFrame) -> DataFrame:
+    """Driver tier: ONE Arrow collect of the (u, v) table, the vectorized
+    min-label union-find, and an Arrow upload of (doc_id, cluster_id).
+    Output is sorted by doc_id (np.unique) — deterministic regardless of
+    collect order."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = _arrow_collect(uv)
+    u = np.ascontiguousarray(pdf["u"].to_numpy(dtype=np.int64))
+    v = np.ascontiguousarray(pdf["v"].to_numpy(dtype=np.int64))
+    nodes, root = _uf_min_labels(u, v)
+    return _arrow_upload(
+        uv.sparkSession,
+        pd.DataFrame({"doc_id": nodes, "cluster_id": root}),
+        _LABELS_SCHEMA,
+    )
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
     store=None,
     pre_contract: bool = True,
-    driver_max_edges: int = _DRIVER_CC_MAX_EDGES,
+    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """edges(a, b) -> assignments(doc_id, cluster_id), cluster_id = component min.
 
@@ -232,12 +264,12 @@ def connected_components(
     tables the channels emit. Disable for adversarially skewed inputs
     where even salted contraction groups would be too large.
 
-    driver_max_edges: when store=None and the edge table is at most this
-    many rows (raw count — a cheap cached-block scan — or, failing that,
-    the distinct count after iter_000), the star loop is replaced by ONE
-    Arrow collect + the same vectorized min-label union-find the
-    contraction uses — identical labels by construction (both converge
-    to component min), pinned by
+    driver_max_edges: when the edge table is at most this many rows
+    (raw count — a cheap scan of the checkpointed edge table — or, with
+    store=None only, the distinct count after iter_000), the star loop
+    is replaced by ONE Arrow collect + the same vectorized min-label
+    union-find the contraction uses (_driver_labels) — identical labels
+    by construction (both converge to component min), pinned by
     tests/test_components.py::test_cc_driver_tier_equals_star_loop.
     The raw-count tier runs ZERO shuffles: min-label union-find is
     idempotent over duplicate edges, so the distinct() exchange the
@@ -250,15 +282,23 @@ def connected_components(
     combine (operators/ann._DRIVER_COMBINE_MAX_ROWS); at the default
     bound the collect is ≤ ~64 MB. Above the bound — any corpus whose
     dup graph is genuinely large, e.g. 10^12 docs — the distributed
-    loop runs exactly as before, and store-backed (resumable) runs
-    always take the durable loop: a mid-CC crash must resume from
-    parquet, not from driver memory. Set 0 to force the loop.
+    loop runs. None (the default) reads the module's
+    _DRIVER_CC_MAX_EDGES at call time, so callers that cannot pass the
+    argument (the pipeline) can still be pinned to the loop; 0 forces
+    the loop.
 
-    `store` (a sources.io.StageStore) makes every iteration durable and
-    resume-aware: iteration i persists as stage "cc/iter_{i:03d}"; a
-    re-run after a mid-CC crash reads completed iterations back and
-    continues from the first missing one (the loop is deterministic, so
-    the replayed termination check decides identically).
+    `store` (a sources.io.StageStore) makes the result durable and
+    resume-aware. The driver tier persists its labels as stage
+    "cc/labels"; a re-run after a crash inside CC reads them back if
+    they were written, and otherwise repeats the one driver pass over
+    the durable edges stage. In the loop, iteration i persists as stage
+    "cc/iter_{i:03d}"; a re-run after a mid-CC crash reads completed
+    iterations back and continues from the first missing one (the loop
+    is deterministic, so the replayed termination check decides
+    identically).
+
+    Raises RuntimeError when the loop has not converged after max_iter
+    star rounds — the labels would not be components.
 
     Driver-action budget (the serial fraction that caps N→4N scaling —
     each collect is a full stage barrier the whole cluster idles behind):
@@ -293,43 +333,34 @@ def connected_components(
         ).collect()[0]
         return out, int(row["n"]), int(row["h"])
 
+    if driver_max_edges is None:
+        driver_max_edges = _DRIVER_CC_MAX_EDGES
+    spark = edges.sparkSession
     base = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).where(
         F.col("u") != F.col("v")
     )
 
-    if store is None and driver_max_edges > 0:
+    if driver_max_edges > 0:
         # Driver-tier pre-check on the RAW edge count — one cheap job
-        # (the pipeline hands us an already-checkpointed edge table, so
-        # this is a cached-block scan). Raw count >= distinct count, so
-        # the guard is conservative: a duplicate-heavy table may fall
-        # through to the loop below even though its distinct form would
-        # have fit, never the reverse.
+        # (the pipeline hands us an already-checkpointed edge table).
+        # Raw count >= distinct count, so the guard is conservative: a
+        # duplicate-heavy table may fall through to the loop below even
+        # though its distinct form would have fit, never the reverse.
         n_raw = base.count()
-        if n_raw == 0:
-            spark = edges.sparkSession
-            return spark.createDataFrame([], "doc_id long, cluster_id long")
+        if n_raw == 0 and store is None:
+            return spark.createDataFrame([], _LABELS_SCHEMA)
         if n_raw <= driver_max_edges:
             # ZERO-SHUFFLE driver tier: min-label union-find is
             # idempotent over duplicate edges, so the distinct()
             # exchange the loop path needs (to bound iteration cost) is
-            # pure overhead here — collect the cached blocks directly.
-            # At 1.6M docs this removes the clusters stage's only
-            # shuffle plus the iter_000 checkpoint+aggregate job
+            # pure overhead here — collect the checkpointed edges
+            # directly. At 1.6M docs this removes the clusters stage's
+            # only shuffle plus the iter_000 checkpoint+aggregate job
             # (~1.5-2 s of core-count-independent wall on BOTH legs of
-            # the N-vs-4N sweep). Output is sorted by doc_id
-            # (np.unique) — deterministic regardless of collect order.
-            import numpy as np
-            import pandas as pd
-
-            pdf = _arrow_collect(base)
-            u = np.ascontiguousarray(pdf["u"].to_numpy(dtype=np.int64))
-            v = np.ascontiguousarray(pdf["v"].to_numpy(dtype=np.int64))
-            nodes, root = _uf_min_labels(u, v)
-            return _arrow_upload(
-                edges.sparkSession,
-                pd.DataFrame({"doc_id": nodes, "cluster_id": root}),
-                "doc_id long, cluster_id long",
-            )
+            # the N-vs-4N sweep).
+            if store is None:
+                return _driver_labels(base)
+            return store.materialize("cc/labels", lambda: _driver_labels(base))
 
     if pre_contract and store is not None:
         # one union-find pass per hash bucket before the first star
@@ -346,8 +377,7 @@ def connected_components(
         base = _contract_local(base)
     e, n, h = _persist(base.distinct(), "cc/iter_000")
     if n == 0:
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "doc_id long, cluster_id long")
+        return spark.createDataFrame([], _LABELS_SCHEMA)
 
     if store is None and n <= driver_max_edges:
         # driver tier, distinct form: reached only when the RAW count
@@ -355,18 +385,7 @@ def connected_components(
         # (duplicate-heavy caller input — the pipeline's edge table is
         # already unique by (a,b), so it takes the zero-shuffle tier
         # above). iter_000 is materialized, so this is a block fetch.
-        import numpy as np
-        import pandas as pd
-
-        pdf = _arrow_collect(e)
-        u = np.ascontiguousarray(pdf["u"].to_numpy(dtype=np.int64))
-        v = np.ascontiguousarray(pdf["v"].to_numpy(dtype=np.int64))
-        nodes, root = _uf_min_labels(u, v)
-        return _arrow_upload(
-            edges.sparkSession,
-            pd.DataFrame({"doc_id": nodes, "cluster_id": root}),
-            "doc_id long, cluster_id long",
-        )
+        return _driver_labels(e)
 
     if store is None and pre_contract:
         # graph too big for the driver tier — contract now (deferred
@@ -384,6 +403,11 @@ def connected_components(
             if h == prev_h:
                 break
         prev_e, prev_n, prev_h = e, n, h
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            f"star rounds ({n} edges left); the labels would not be components"
+        )
     # converged: every edge is (member, component_min)
     members = e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = e.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))

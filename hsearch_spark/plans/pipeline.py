@@ -27,10 +27,15 @@ from pyspark.sql import functions as F
 from hsearch_spark.config import DedupConfig
 from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
 from hsearch_spark.functions.text import extract_pages
-from hsearch_spark.operators.candidates import candidate_pairs, simhash_candidates
+from hsearch_spark.operators.candidates import (
+    candidate_pairs,
+    dropped_pairs_metrics,
+    simhash_candidates,
+    simhash_keyed,
+)
 from hsearch_spark.operators.components import assign_clusters, connected_components
 from hsearch_spark.operators.dedup import exact_duplicate_pairs
-from hsearch_spark.operators.substring import substring_edges
+from hsearch_spark.operators.substring import anchor_dropped_metrics, substring_edges
 from hsearch_spark.operators.verify import verify_pairs
 from hsearch_spark.sources.io import StageStore, input_fingerprint
 
@@ -117,6 +122,51 @@ def run_dedup(
         ),
     )
 
+    # no-silent-truncation ledger (north rule: per-partition lineage +
+    # metrics): for every hot bucket the star-R policy bounded — and for
+    # every template anchor the substring df-gate dropped — record how
+    # many all-pairs candidates were NOT emitted: the auditable
+    # counterpart of the reference's silent 500-hit cap
+    # (pcluster.cpp:115-116). Checkpointed as its own stage when a
+    # work_dir is set (row count lands in stage metrics for free); it
+    # reads only sigs, so when the channels run threaded (the default
+    # with a work_dir) it runs from a driver thread beside them.
+    # Without a work_dir it is left LAZY in the result so the hot path
+    # pays nothing unless the caller consumes it.
+    def build_ledger() -> DataFrame:
+        band_led = dropped_pairs_metrics(
+            explode_bands(sigs, config), config
+        ).select(
+            F.lit("minhash_bands").alias("channel"),
+            F.col("band_hash").cast("string").alias("bucket_key"),
+            F.col("n").alias("bucket_size"),
+            "dropped_pairs",
+        )
+        parts_ = [band_led]
+        if enable_simhash_channel:
+            keyed, _ = simhash_keyed(sigs, config)
+            parts_.append(
+                dropped_pairs_metrics(keyed, ["combo_key"], config).select(
+                    F.lit("simhash_combos").alias("channel"),
+                    F.col("combo_key").cast("string").alias("bucket_key"),
+                    F.col("n").alias("bucket_size"),
+                    "dropped_pairs",
+                )
+            )
+        if enable_substring_channel:
+            parts_.append(
+                anchor_dropped_metrics(sigs, config).select(
+                    F.lit("substring_anchors").alias("channel"),
+                    F.col("anchor").cast("string").alias("bucket_key"),
+                    F.col("n").alias("bucket_size"),
+                    "dropped_pairs",
+                )
+            )
+        out = parts_[0]
+        for p in parts_[1:]:
+            out = out.unionByName(p)
+        return out
+
     # The edge channels (minhash-verify, exact pairs, simhash, substring)
     # are INDEPENDENT until the final best-edge union — each consumes only
     # already-checkpointed stages (cands/sigs/docs). Two materialization
@@ -168,15 +218,20 @@ def run_dedup(
 
     if concurrent_channels is None:
         concurrent_channels = store is not None
+    dropped = None
     if concurrent_channels:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(channels)) as pool:
+        threaded = dict(channels)
+        if emit_dropped_ledger and store is not None:
+            threaded["dropped_pairs"] = build_ledger
+        with ThreadPoolExecutor(max_workers=len(threaded)) as pool:
             futures = {
                 name: pool.submit(stage, name, build)
-                for name, build in channels.items()
+                for name, build in threaded.items()
             }
             parts = {name: f.result() for name, f in futures.items()}
+        dropped = parts.pop("dropped_pairs", None)
     else:
         parts = {name: build() for name, build in channels.items()}
 
@@ -199,10 +254,14 @@ def run_dedup(
         )
 
     edges = stage("edges", build_edges)
-    # CC iterations persist through the store too ("cc/iter_NNN" stages):
-    # a mid-CC crash resumes from the last completed iteration instead of
-    # restarting the loop, and iteration blocks are durable parquet, not
-    # lineage-truncated local blocks a lost executor can't recompute
+    # CC persists through the store too: a graph within the driver tier's
+    # bound (components._DRIVER_CC_MAX_EDGES) is labelled in one driver
+    # pass and its labels land as the "cc/labels" stage, so a crash inside
+    # CC re-runs only that pass from the durable edges stage; a larger
+    # graph runs the star loop with one "cc/iter_NNN" stage per round, so
+    # a mid-CC crash resumes from the last completed round, and the round
+    # blocks are durable parquet, not lineage-truncated local blocks a
+    # lost executor can't recompute
     assignments = stage(
         "clusters",
         lambda: assign_clusters(
@@ -210,64 +269,11 @@ def run_dedup(
         ),
     )
 
-    # no-silent-truncation ledger (north rule: per-partition lineage +
-    # metrics): for every hot bucket the star-R policy bounded — and for
-    # every template anchor the substring df-gate dropped — record how
-    # many all-pairs candidates were NOT emitted: the auditable
-    # counterpart of the reference's silent 500-hit cap
-    # (pcluster.cpp:115-116). Checkpointed as its own stage when a
-    # work_dir is set (row count lands in stage metrics for free);
-    # otherwise left LAZY in the result so the hot path pays nothing
-    # unless the caller consumes it.
-    dropped = None
-    if emit_dropped_ledger:
-        from hsearch_spark.operators.candidates import (
-            dropped_pairs_metrics,
-            simhash_keyed,
+    if emit_dropped_ledger and dropped is None:
+        dropped = (
+            stage("dropped_pairs", build_ledger) if store is not None
+            else build_ledger()
         )
-
-        def build_ledger() -> DataFrame:
-            band_led = dropped_pairs_metrics(
-                explode_bands(sigs, config), config
-            ).select(
-                F.lit("minhash_bands").alias("channel"),
-                F.col("band_hash").cast("string").alias("bucket_key"),
-                F.col("n").alias("bucket_size"),
-                "dropped_pairs",
-            )
-            parts_ = [band_led]
-            if enable_simhash_channel:
-                keyed, _ = simhash_keyed(sigs, config)
-                parts_.append(
-                    dropped_pairs_metrics(keyed, ["combo_key"], config).select(
-                        F.lit("simhash_combos").alias("channel"),
-                        F.col("combo_key").cast("string").alias("bucket_key"),
-                        F.col("n").alias("bucket_size"),
-                        "dropped_pairs",
-                    )
-                )
-            if enable_substring_channel:
-                from hsearch_spark.operators.substring import (
-                    anchor_dropped_metrics,
-                )
-
-                parts_.append(
-                    anchor_dropped_metrics(sigs, config).select(
-                        F.lit("substring_anchors").alias("channel"),
-                        F.col("anchor").cast("string").alias("bucket_key"),
-                        F.col("n").alias("bucket_size"),
-                        "dropped_pairs",
-                    )
-                )
-            out = parts_[0]
-            for p in parts_[1:]:
-                out = out.unionByName(p)
-            return out
-
-        if store is not None:
-            dropped = stage("dropped_pairs", build_ledger)
-        else:
-            dropped = build_ledger()
 
     metrics = {"timings_sec": timings}
     if store is not None:

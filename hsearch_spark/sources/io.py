@@ -9,7 +9,8 @@ In-sandbox there is no iceberg-spark-runtime jar, so the store writes
 parquet directories with the identical schema plus a `_LINEAGE.json`
 sidecar carrying what Iceberg snapshot metadata would carry:
 run-config hash, input fingerprint, stage name, row count,
-per-partition row counts, and wall-clock.
+per-partition row counts (read from the parquet footers, so recording
+them launches no Spark job), and wall-clock.
 
 Iceberg is wired BEHIND A FLAG, not just documented: when
 `SPARK_GRAFT_ICEBERG=1` AND the Iceberg runtime classes are actually
@@ -134,27 +135,47 @@ class StageStore:
         else:
             df.write.mode("overwrite").parquet(path)
         elapsed = time.monotonic() - t0
-        out = self.read(stage)
-        # per-partition lineage: rows per written file (what Iceberg's
-        # manifest would record per data file)
-        per_file = (
-            out.groupBy(F.input_file_name().alias("file"))
-            .count()
-            .collect()
-        )
+        per_file = self._rows_per_file(stage)
         meta = {
             "config_hash": self.config_hash,
             "input_fingerprint": self.input_fingerprint,
             "stage": stage,
-            "rows": int(sum(r["count"] for r in per_file)),
-            "files": {os.path.basename(r["file"]): int(r["count"]) for r in per_file},
+            "rows": sum(per_file.values()),
+            "files": per_file,
             "write_sec": round(elapsed, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         with open(self._sidecar(stage), "w") as f:
             json.dump(meta, f, indent=1)
         self.metrics[stage] = meta
-        return out
+        return self.read(stage)
+
+    def _rows_per_file(self, stage: str) -> dict[str, int]:
+        """Per-partition lineage: rows per written data file (what
+        Iceberg's manifest records per data file), read from metadata —
+        the parquet footers, or the Iceberg `files` metadata table —
+        instead of a Spark job over the data. Zero-row files are left
+        out."""
+        if self.use_iceberg:
+            rows = (
+                self.spark.table(self._table(stage) + ".files")
+                .select("file_path", "record_count")
+                .collect()
+            )
+            counts = {
+                os.path.basename(r["file_path"]): int(r["record_count"])
+                for r in rows
+            }
+        else:
+            import pyarrow.parquet as pq
+
+            path = self._path(stage)
+            counts = {
+                fn: pq.read_metadata(os.path.join(path, fn)).num_rows
+                for fn in sorted(os.listdir(path))
+                if fn.startswith("part-") and fn.endswith(".parquet")
+            }
+        return {fn: n for fn, n in counts.items() if n > 0}
 
     def materialize(self, stage: str, build) -> DataFrame:
         """Resume-aware: read if complete, else build() → write."""

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from hsearch_spark.operators.components import assign_clusters, connected_components
 
 
@@ -71,6 +73,17 @@ def test_cc_long_path_converges(spark):
     }
     assert set(got.values()) == {0}
     assert len(got) == 41
+
+
+def test_cc_iteration_limit_fails_loudly(spark):
+    """A star loop that runs out of max_iter before converging must raise,
+    never return the half-merged labels of a long path as components."""
+    edges = [(i, i + 1) for i in range(300)]
+    df = spark.createDataFrame(edges, "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(
+            df, max_iter=2, pre_contract=False, driver_max_edges=0
+        ).collect()
 
 
 def test_cc_driver_tier_equals_star_loop(spark):

@@ -120,11 +120,19 @@ def test_checkpoint_resume(spark, tmp_path):
     c2 = {r["doc_id"]: r["cluster_id"] for r in r2.clusters.collect()}
     assert c1 == c2
     # lineage sidecars carry per-file row counts
-    lineage = json.load(
-        open(os.path.join(work, cfg_hash, "clusters", "_LINEAGE.json"))
-    )
+    stage_dir = os.path.join(work, cfg_hash, "clusters")
+    lineage = json.load(open(os.path.join(stage_dir, "_LINEAGE.json")))
     assert lineage["rows"] == len(c1)
     assert sum(lineage["files"].values()) == len(c1)
+    # one entry per non-empty data file on disk, and the row total agrees
+    # with a full read of the stage
+    data_files = {
+        fn for fn in os.listdir(stage_dir)
+        if fn.startswith("part-") and fn.endswith(".parquet")
+        and spark.read.parquet(os.path.join(stage_dir, fn)).count() > 0
+    }
+    assert set(lineage["files"]) == data_files
+    assert lineage["rows"] == spark.read.parquet(stage_dir).count()
 
 
 def test_changed_input_invalidates_checkpoints(spark, tmp_path):
@@ -148,12 +156,16 @@ def test_changed_input_invalidates_checkpoints(spark, tmp_path):
     assert r3.metrics["stages"]["docs"].get("resumed") is True
 
 
-def test_mid_cc_crash_resume(spark, tmp_path):
+def test_mid_cc_crash_resume(spark, tmp_path, monkeypatch):
     """Kill the run mid-CC (simulated: wipe the clusters stage and the
     LAST completed CC iterations, keeping earlier ones) → the re-run
     must resume the completed iterations and converge to the same
     assignments — the durable-iteration guarantee localCheckpoint
-    cannot give."""
+    cannot give. The fixture's graph is within the driver tier's bound,
+    so the bound is set to 0 to pin the pipeline to the durable loop."""
+    from hsearch_spark.operators import components
+
+    monkeypatch.setattr(components, "_DRIVER_CC_MAX_EDGES", 0)
     work = str(tmp_path / "work")
     pages, _ = pages_dataframe(spark, n_docs=120, seed=3)
     r1 = run_dedup(spark, pages, work_dir=work)
@@ -173,6 +185,30 @@ def test_mid_cc_crash_resume(spark, tmp_path):
     assert r2.metrics["stages"][f"cc/{iters[0]}"].get("resumed") is True
     # and every iteration is durable again after the re-run
     assert sorted(os.listdir(cc_dir)) == iters
+
+
+def test_driver_tier_cc_crash_resume(spark, tmp_path):
+    """A store-backed run within the driver tier's bound persists its CC
+    labels as the durable stage cc/labels (no star-loop iterations). A
+    crash inside CC (simulated: wipe clusters and cc/labels) re-runs the
+    one driver pass from the durable edges stage, to the same
+    assignments."""
+    work = str(tmp_path / "work")
+    pages, _ = pages_dataframe(spark, n_docs=120, seed=3)
+    r1 = run_dedup(spark, pages, work_dir=work)
+    c1 = {r["doc_id"]: r["cluster_id"] for r in r1.clusters.collect()}
+    cfg_hash = DedupConfig().config_hash()
+    cc_dir = os.path.join(work, cfg_hash, "cc")
+    assert os.listdir(cc_dir) == ["labels"]
+    assert r1.metrics["stages"]["cc/labels"]["rows"] > 0
+    for stage in ("clusters", os.path.join("cc", "labels")):
+        shutil.rmtree(os.path.join(work, cfg_hash, stage))
+    r2 = run_dedup(spark, pages, work_dir=work)
+    c2 = {r["doc_id"]: r["cluster_id"] for r in r2.clusters.collect()}
+    assert c1 == c2
+    assert r2.metrics["stages"]["edges"].get("resumed") is True
+    assert "resumed" not in r2.metrics["stages"]["cc/labels"]
+    assert os.listdir(cc_dir) == ["labels"]
 
 
 def test_edges_carry_method_and_threshold(spark, pipeline_result):
